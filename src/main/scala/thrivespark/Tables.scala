@@ -15,16 +15,8 @@ object Tables {
   // Reader cache: a DataFrame is an immutable plan, so reusing one per
   // (session, file) is result-identical while skipping the repeated footer
   // read + relation resolution that 100+ queries would otherwise each pay.
-  // Entries of stopped sessions are pruned on access so a long-lived JVM
-  // (test suites, multi-session services) doesn't pin dead sessions and
-  // their plans forever. (getOrElseUpdate may double-evaluate under a race;
-  // harmless — both values are equivalent immutable plans.)
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    cache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    cache.getOrElseUpdate((spark, s"$sfDir/$name.parquet"), {
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    Shared.stage(spark, Shared.Key(sfDir, "table", name)) {
       // ms-precision parquet timestamps must arrive as TIMESTAMP (session-TZ
       // UTC), not TIMESTAMP_NTZ — same values under UTC, but unix_micros() and
       // friends require the TZ-typed flavor.
@@ -34,8 +26,7 @@ object Tables {
       // integer division is lossless — FIXTURES.md).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$sfDir/$name.parquet")
-    })
-  }
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")
@@ -66,13 +57,6 @@ object Tables {
   // branch-free loop.
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
-  // (r22, ADVICE) the r21 fanOut dead-end helper moved to the ProfR21
-  // scratch profiler — its only caller. The production namespace must not
-  // export a known-loss primitive (and df.rdd.getNumPartitions both forces
-  // a separate physical planning pass and reads a pre-AQE partition count).
-  // The measurement note lives with the helper in ProfR21 and in
-  // OPTIMIZATION_r21.md "Measured dead ends".
-
   // Parsed-props projection, persisted per (session, sf): the JSON parse of
   // events.props is the single most expensive scalar op over the events
   // table, and several queries need the same `$.k` field — parse once,
@@ -80,16 +64,12 @@ object Tables {
   // cluster this would be the one checkpointed intermediate of the events
   // stage). Column `k` is the parsed INT; all other event columns pass
   // through unchanged.
-  private val parsedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def eventsParsed(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    parsedCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    parsedCache.getOrElseUpdate((s, d), {
+    Shared.stage(s, Shared.Key(d, "eventsParsed")) {
       events(s, d)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 }

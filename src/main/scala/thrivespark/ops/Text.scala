@@ -2,7 +2,7 @@ package thrivespark.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import thrivespark.{Op, Tables => T}
+import thrivespark.{Op, Shared, Tables => T}
 import thrivespark.Det._
 
 /** SURVEY.md §2.9 text analysis (#48–#49) plus the training-data-pipeline
@@ -104,82 +104,16 @@ object Text {
       .select(col("p.l").as("l"), col("p.r").as("r"))
   }
 
-  /** localCheckpoint storage registry: `Dataset.unpersist` does NOT
-    * release localCheckpoint blocks — it only uncaches CacheManager
-    * entries, while the checkpoint persists its INTERNAL RDD directly
-    * (verified on this Spark: the checkpointed RDD stays fully cached
-    * after unpersist(true)). The trainers therefore record each
-    * checkpoint's RDD handles here and `bpeRelease` frees them by
-    * handle. Snapshot-diff of getPersistentRDDs is safe: the training
-    * loops are single-threaded within a session.
-    *
-    * OWNERSHIP INVARIANT: every frame the BPE trainers return (or
-    * checkpoint internally) is registered here with STRONG references to
-    * its LogicalPlan + RDD handles, held until `bpeRelease(frame)` is
-    * called. Callers MUST route release through bpeRelease — a plain
-    * `frame.unpersist()` releases NOTHING for checkpoint-backed frames
-    * (see above) and leaves both the blocks and this registry's entry
-    * resident for the life of the session. Bench/Verify sessions satisfy
-    * the invariant by construction (the shared training caches are
-    * per-session and torn down with it); long-lived embedding sessions
-    * must pair every train call with a bpeRelease. */
-  private val ckStorage = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[org.apache.spark.rdd.RDD[_]]]
-
-  private def localCheckpointTracked(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(false)
-    val added = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r }.toSeq
-    ckStorage.put(out.queryExecution.logical, added): Unit
-    out
-  }
-
-  /** Release the BlockManager storage behind a frame returned by the BPE
-    * trainers — checkpoint-backed (via the registry) or plain persist. */
-  def bpeRelease(df: DataFrame): Unit = {
-    ckStorage.remove(df.queryExecution.logical)
-      .foreach(_.foreach(_.unpersist(false)))
-    df.unpersist(): Unit
-  }
-
   // -------------------------------------- shared-derivation cache ---
 
-  /** Registry for the persisted SHARED derivations (the four-flag filter
-    * gate, the quality-model train/score boundaries, the positional
-    * window index): frames that ≥2 consumers read per session, persisted
-    * so the work behind them runs once. Storage dedup is the
-    * CacheManager's: persisting an equivalent plan twice creates ONE
-    * cache entry (sameResult match), so registering per-call handles is
-    * harmless — the registry exists so the storage is RELEASABLE
-    * (`releaseSharedCaches`), mirroring the trimodal-manifest registry
-    * (Similarity.releaseManifestCache) instead of pinning blocks for the
-    * session's lifetime. Bench/Verify sessions tear the caches down with
-    * the session; long-lived sessions with changing inputs (e.g. repeated
-    * qualityModelScoresOn holdout splits) call releaseSharedCaches
-    * between generations. */
-  private val sharedCaches = scala.collection.concurrent.TrieMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]
-
-  private def persistShared(df: DataFrame): DataFrame =
-    sharedCaches.getOrElseUpdate(df.queryExecution.logical, {
-      // registry keys are per-call plan objects, but storage is deduped by
-      // the CacheManager's sameResult match — probe it first so re-deriving
-      // the same frame doesn't re-persist (and doesn't WARN)
-      if (df.sparkSession.sharedState.cacheManager.lookupCachedData(
-          df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          df.queryExecution.analyzed).isEmpty)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    })
-
-  /** Unpersist every shared derivation and drop the registry entries. */
-  def releaseSharedCaches(): Unit = {
-    sharedCaches.values.foreach(df => df.unpersist(): Unit)
-    sharedCaches.clear()
-  }
+  /** Persist a SHARED derivation — a frame ≥2 consumers read per session
+    * (the four-flag filter gate, the quality-model train/score boundaries,
+    * the positional window index) — once per session through the shared
+    * registry, keyed on its plan, so the work behind it runs once and the
+    * storage is releasable (Shared.release). */
+  private def persistShared(name: String, df: DataFrame): DataFrame =
+    Shared.stage(df.sparkSession, Shared.Key(name, df))(
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The positional shared-window index — THE artifact of the substring
     * family: one (doc_id, i, h) row per K-token window occurrence, h =
@@ -201,7 +135,7 @@ object Text {
     * is bucketing the materialized index by h. */
   def windowIndex(docs: DataFrame, K: Int): DataFrame = {
     val n = docs.sparkSession.sessionState.conf.numShufflePartitions
-    persistShared(windowOcc(docs, K).repartition(n, col("h")))
+    persistShared("windowIndex", windowOcc(docs, K).repartition(n, col("h")))
   }
 
   /** Per-window document frequency over the shared index — the SECOND
@@ -212,7 +146,7 @@ object Text {
     * h-partitioned (windowIndex), so the aggregation and every downstream
     * join on h are exchange-free. */
   def windowDf(docs: DataFrame, K: Int): DataFrame =
-    persistShared(windowIndex(docs, K)
+    persistShared("windowDf", windowIndex(docs, K)
       .groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("df")))
 
@@ -234,8 +168,8 @@ object Text {
     * released one-behind (after its child has been built from it) instead
     * of via an eager count() per iteration — halving the job count, which
     * at 8 iterations is the dominant cost of the loop, not the data.
-    * Callers release the RETURNED corpus with `bpeRelease`, not
-    * unpersist() (see ckStorage). */
+    * Callers release the RETURNED corpus with `Shared.free`, not
+    * unpersist(), which leaves a checkpoint's blocks behind. */
   def bpeTrain(docs: DataFrame, iters: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     var corpus = bpeCorpus(docs).persist()
@@ -247,7 +181,7 @@ object Text {
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).head()
       // `corpus` is now materialized in storage; its parent can go
-      if (prev != null) bpeRelease(prev)
+      if (prev != null) Shared.free(prev)
       val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((it, l, r, cnt))
       prev = corpus
@@ -258,12 +192,12 @@ object Text {
       // planning overhead (measured: 10.6 s → ~3 s for the 8-round loop).
       // On a cluster the equivalent lineage cut is the per-round corpus
       // write the doc comment above describes.
-      corpus = localCheckpointTracked(corpus.withColumn("s",
+      corpus = corpus.withColumn("s",
         replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + " " + r + BpeD))))
+          lit(BpeD + l + " " + r + BpeD))).localCheckpoint(false)
     }
     corpus.count()                    // materialize the final rewrite …
-    if (prev != null) bpeRelease(prev) // … then release its parent
+    if (prev != null) Shared.free(prev) // … then release its parent
     (merges.result(), corpus)
   }
 
@@ -315,34 +249,30 @@ object Text {
         .groupBy(col("l"), col("r")).agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).head()
-      if (prev != null) bpeRelease(prev)
+      if (prev != null) Shared.free(prev)
       val (l, r, cnt) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((it, l, r, cnt))
       prev = vocab
-      vocab = localCheckpointTracked(vocab.withColumn("s",
+      // lazy localCheckpoint, the bpeTrain lineage cut
+      vocab = vocab.withColumn("s",
         replace(col("s"), lit(BpeD + l + BpeD + BpeD + r + BpeD),
-          lit(BpeD + l + r + BpeD))))   // char merge concatenates, no space
+          lit(BpeD + l + r + BpeD)))    // char merge concatenates, no space
+        .localCheckpoint(false)
     }
     vocab.count()
-    if (prev != null) bpeRelease(prev)
+    if (prev != null) Shared.free(prev)
     (merges.result(), vocab)
   }
 
-  /** Per-(session, dir) cache of the char-level training result — the
-    * mergeCache move applied to the char twin ops: text_bpe_char_train and
+  /** Per-(session, dir) char-level training result — the bpeMergesFor
+    * move applied to the char twin ops: text_bpe_char_train and
     * text_bpe_char_segment previously EACH ran the full 8-iteration loop.
     * The cached vocab frame stays deliberately resident (vocab-sized,
     * checkpoint-backed — the segment op's display derives from it). */
-  private val charTrainCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (Seq[(Int, String, String, Long)], DataFrame)]
-
   private[ops] def bpeCharTrained(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    charTrainCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    charTrainCache.getOrElseUpdate((s, d),
+      : (Seq[(Int, String, String, Long)], DataFrame) =
+    Shared.stage(s, Shared.Key(d, "bpeCharTrain"))(
       bpeCharTrain(T.documents(s, d), BpeIters))
-  }
 
   /** DuckDB mirror for the char-level trainer: v0 = word-frequency table
     * with wrapped char symbols (+ </w>), then per iteration a weighted
@@ -376,12 +306,6 @@ object Text {
 
   private val BpeIters = 8
 
-  /** Learned-merge cache per (session, corpus dir): training runs once and
-    * both BPE ops share it (the Tables reader-cache move). The cache holds
-    * only the 8 (it, l, r, cnt) tuples — O(iters) driver memory. */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[(Int, String, String, Long)]]
-
   /** Training corpus = a deterministic 1-in-5 sample. Tokenizers are
     * trained on a corpus SAMPLE and applied to the whole corpus — at 100 TB
     * nobody pays 8 full-corpus bigram shuffles for merge statistics a 20%
@@ -391,15 +315,16 @@ object Text {
   private[ops] def bpeTrainSlice(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 5 === 0)
 
+  /** Learned merges per (session, corpus dir): training runs once and both
+    * BPE ops share it (the Tables reader-cache move). The entry holds only
+    * the 8 (it, l, r, cnt) tuples — O(iters) driver memory. */
   private[ops] def bpeMergesFor(s: org.apache.spark.sql.SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] = {
-    mergeCache.filterInPlace { case ((ss, _), _) => !ss.sparkContext.isStopped }
-    mergeCache.getOrElseUpdate((s, d), {
+      : Seq[(Int, String, String, Long)] =
+    Shared.stage(s, Shared.Key(d, "bpeMerges")) {
       val (merges, corpus) = bpeTrain(bpeTrainSlice(T.documents(s, d)), BpeIters)
-      bpeRelease(corpus)
+      Shared.free(corpus)
       merges
-    })
-  }
+    }
 
   /** Tokenize with an already-trained merge list: ONE map-only projection
     * chaining the greedy replaces in merge order — equivalent to the
@@ -475,7 +400,7 @@ object Text {
     * once per consumer. Registered in the shared-cache registry (r14) so
     * the storage is releasable, not pinned for the session's lifetime. */
   def filterFlags(docs: DataFrame): DataFrame =
-    persistShared(filterFlagsUncached(docs))
+    persistShared("filterFlags", filterFlagsUncached(docs))
 
   /** Per-doc bigram rows (doc_id, gram) over a (doc_id, ts) frame, built
     * POST-explode in codegen (the fingerprint/windowIndex trick): position
@@ -572,7 +497,7 @@ object Text {
     // persisted (via the releasable shared registry): the melt feeds the
     // totals aggregate and the per-value counts — without it the
     // four-flag gate label would derive twice
-    val jt = persistShared(surfaceFeatures(trainDocs)
+    val jt = persistShared("qualityLabels", surfaceFeatures(trainDocs)
       .join(filterFlags(trainDocs.select(col("doc_id"),
           split(col("text"), " ").as("ts")))
         .select(col("doc_id"), col("keep").as("label")), "doc_id"))
@@ -623,7 +548,7 @@ object Text {
     // score-side (features, gate label) boundary — label rides along only
     // as the gate_keep comparison column; persisted via the releasable
     // shared registry
-    val js = persistShared(surfaceFeatures(scoreDocs)
+    val js = persistShared("qualityLabels", surfaceFeatures(scoreDocs)
       .join(filterFlags(scoreDocs.select(col("doc_id"),
           split(col("text"), " ").as("ts")))
         .select(col("doc_id"), col("keep").as("label")), "doc_id"))
@@ -777,7 +702,7 @@ object Text {
     // the index). The capped variant has exactly ONE consumer per session
     // (the maxdf report) — persisting it would be pure materialization
     // overhead (the r18 hashedBuckets lesson), so it streams through.
-    if (maxDf <= 0) persistShared(runs) else runs
+    if (maxDf <= 0) persistShared("spanRuns", runs) else runs
   }
 
   /** Pairwise span-coverage report — the CONTAINMENT signal of the

@@ -9,17 +9,40 @@ import thrivespark.ops.{Dedup, Similarity}
 class DedupSimilaritySpec extends AnyFunSuite {
   import SparkTestBase._
 
-  test("r22 (r20 item 5): nearDupPairs' pair cache keeps one sf dir per " +
-      "session — cycling dirs evicts the stale persisted entry") {
-    Dedup.nearDupPairs(spark, sf0001, 0.6).count()
-    Dedup.nearDupPairs(spark, sf001, 0.6).count()
-    val mine = Dedup.pairCacheKeys.filter(_._1 eq spark)
-    assert(mine.map(_._2) == Set(sf001),
-      s"stale sf-dir entries survived the cycle: $mine")
-    // cycling back re-computes (correctness over reuse) and evicts the other
-    Dedup.nearDupPairs(spark, sf0001, 0.6).count()
-    val mine2 = Dedup.pairCacheKeys.filter(_._1 eq spark)
-    assert(mine2.map(_._2) == Set(sf0001), s"$mine2")
+  test("nearDupPairs under the registry's rule: alternating two sf dirs " +
+      "rebuilds nothing, a third evicts the least recently used dir") {
+    import thrivespark.Shared
+    val sc = spark.sparkContext
+    val p1 = Dedup.nearDupPairs(spark, sf0001, 0.6); p1.count()
+    val p2 = Dedup.nearDupPairs(spark, sf001, 0.6); p2.count()
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 2).foreach { _ =>
+      assert(Dedup.nearDupPairs(spark, sf0001, 0.6) eq p1)
+      assert(Dedup.nearDupPairs(spark, sf001, 0.6) eq p2)
+      p1.count(); p2.count()
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "alternating two dirs must not rebuild a stage")
+    // a third dir (a copy of sf0.001's tables) evicts sf0.001, the least
+    // recently used, shingles included; sf0.01 stays
+    val third = java.nio.file.Files.createTempDirectory("graft_sf_copy")
+    try {
+      java.nio.file.Files.list(java.nio.file.Paths.get(sf0001)).forEach { f =>
+        java.nio.file.Files.copy(f, third.resolve(f.getFileName)): Unit }
+      assert(Dedup.nearDupPairs(spark, third.toString, 0.6).count() == p1.count())
+      val names = Shared.keys(spark).groupBy(_.dir).map { case (d, ks) =>
+        d -> ks.map(_.name).toSet }
+      assert(!names.contains(Some(sf0001)), s"sf0.001 entries survived: $names")
+      Seq(sf001, third.toString).foreach { d =>
+        assert(Set("nearDupPairs", "shingles").subsetOf(names(Some(d))), s"$d: $names")
+      }
+    } finally {
+      // touch the two fixture dirs again so the copy's entries are evicted
+      thrivespark.Tables.documents(spark, sf0001)
+      thrivespark.Tables.documents(spark, sf001)
+      java.nio.file.Files.list(third).forEach(f => java.nio.file.Files.delete(f))
+      java.nio.file.Files.delete(third)
+    }
   }
 
   test("dedup_simhash equals brute-force hamming join at sf0.001") {

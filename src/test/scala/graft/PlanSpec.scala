@@ -220,8 +220,29 @@ class PlanSpec extends AnyFunSuite {
     assert(d == 11.0)
     val h = spark.sql("SELECT simhash64(array(1L, 2L, 3L)) AS h").collect()(0).getLong(0)
     assert(h != 0L)
-    // extension wiring registers without error
-    new thrivespark.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
+  }
+
+  test("a session built with GraftExtensions alone (no Register) has the SQL " +
+      "functions and the similarity-join rewrite") {
+    import org.apache.spark.sql.SparkSession
+    val ext = SparkSession.builder()
+      .withExtensions(new thrivespark.GraftExtensions).create()
+    try {
+      val d = ext.sql(
+        """SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
+          |               array(cast(3.0 as float), cast(4.0 as float)))""".stripMargin)
+        .collect()(0).getDouble(0)
+      assert(d == 11.0, s"vec_dot via extensions returned $d")
+      ext.read.parquet(s"$sf0001/embeddings.parquet").createOrReplaceTempView("emb")
+      val plan = ext.sql(
+        """SELECT a.vec_id, b.vec_id FROM emb a JOIN emb b
+          |ON vec_dot(a.embedding, b.embedding) > 0.45 AND a.vec_id < b.vec_id"""
+          .stripMargin).queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), s"rewrite did not fire:\n$plan")
+      assert(plan.contains("__sim_bucket"), s"bucket key missing:\n$plan")
+    } finally SparkSession.setActiveSession(spark)
+    assert(SparkSession.active eq spark)
   }
 
   test("q3_order_priority: top-10 via TakeOrderedAndProject, no global sort") {

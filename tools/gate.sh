@@ -6,10 +6,22 @@
 # (and ideally before every commit): it fails loudly unless BOTH the main
 # and test sources compile. Commit only on exit 0.
 #
+# It also fails when a main source outside the shared-stage registry
+# (thrivespark/Shared.scala) declares a concurrent.TrieMap.
+#
 # Usage:  tools/gate.sh            # compile gate only (~20 s warm)
 #         tools/gate.sh --test     # also run the full ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# One shared-stage registry: every memoised intermediate goes through
+# thrivespark.Shared, so no other main source may hold its own TrieMap cache.
+if grep -rnE 'concurrent\.(\{[^}]*)?TrieMap' src/main/scala \
+    | grep -v '^src/main/scala/thrivespark/Shared\.scala:'; then
+  echo "[gate] FAIL: concurrent.TrieMap outside thrivespark/Shared.scala — route the cache through Shared.stage"
+  exit 1
+fi
+echo "[gate] one registry OK"
 
 echo "[gate] sbt compile + Test/compile ..."
 if ! sbt -batch compile Test/compile > /tmp/gate_compile.log 2>&1; then
